@@ -337,11 +337,24 @@ def _grd_cube(
     spark: SparkSession, bdf: DataFrame, config: CubeConfig
 ) -> Datacube:
     """GRD build body shared by the directory-crawl and explicit-list
-    entry points: crawl + decode + config filters + temporal grid."""
+    entry points: crawl + decode, then the shared cube assembly."""
     from icecube_spark.sources.raster import crawl_iceye_metadata, decode_rasters
 
     meta = crawl_iceye_metadata(bdf)
     layers = meta.join(decode_rasters(bdf).select("path", "pixels"), "path")
+    return _assemble_cube(spark, layers, config, ["pixels"])
+
+
+def _assemble_cube(
+    spark: SparkSession,
+    layers: DataFrame,
+    config: CubeConfig,
+    band_cols: list[str],
+) -> Datacube:
+    """Cube assembly shared by GRD and SLC stacks (crawled metadata
+    joined to the decoded band columns): config filters in reference
+    order, the latest acquisition per date unless temporal_overlap,
+    then the temporal grid."""
     layers = layers.where(
         F.col("acquisition_date").between(
             F.lit(config.start_date.date()), F.lit(config.end_date.date())
@@ -385,7 +398,7 @@ def _grd_cube(
     else:
         cube_df = layers
         ts_col = "acquisition_date"
-    return Datacube(cube_df, "product_file", ts_col, ["pixels"])
+    return Datacube(cube_df, "product_file", ts_col, band_cols)
 
 
 def create_cube_from_slc(
@@ -420,7 +433,7 @@ def _slc_cube(
     spark: SparkSession, bdf: DataFrame, config: CubeConfig, with_rpc: bool
 ) -> Datacube:
     """SLC build body shared by the directory-crawl and explicit-list
-    entry points."""
+    entry points: crawl + decode, then the shared cube assembly."""
     from icecube_spark.sources.hdf5 import crawl_slc_metadata, decode_slc
 
     meta = crawl_slc_metadata(bdf)
@@ -436,14 +449,7 @@ def _slc_cube(
         from icecube_spark.sources.rpc import crawl_rpc_metadata
 
         layers = layers.join(crawl_rpc_metadata(bdf), "path", "left")
-    return build_cube(
-        layers,
-        config,
-        key_col="product_file",
-        ts_col="acquisition_date",
-        angle_col="incidence_center",
-        band_cols=["Real", "Complex"],
-    )
+    return _assemble_cube(spark, layers, config, ["Real", "Complex"])
 
 
 def create_cube_from_list(

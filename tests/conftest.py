@@ -3,14 +3,17 @@
 from __future__ import annotations
 
 import os
+import sys
 
 import duckdb
-import numpy as np
-import pandas as pd
 import pytest
 
+import __spark_entry__ as entry
 from icecube_spark.catalog import TABLES
 from icecube_spark.session import get_spark
+
+sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
+from driver_verify import compare  # noqa: E402
 
 SF_DIR = os.environ.get("ICECUBE_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -38,40 +41,15 @@ def oracle():
     con.close()
 
 
-def normalize(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Mirror the driver's compare: sort columns by name, then rows."""
-    pdf = pdf.reindex(sorted(pdf.columns), axis=1)
-    for c in pdf.columns:
-        if str(pdf[c].dtype).startswith("datetime64"):
-            pdf[c] = pdf[c].astype("datetime64[us]")
-        elif pdf[c].dtype == object:
-            pdf[c] = pdf[c].apply(
-                lambda v: tuple(v) if isinstance(v, (list, np.ndarray)) else v
-            )
-    pdf = pdf.sort_values(by=list(pdf.columns), ignore_index=True)
-    return pdf
+@pytest.fixture(scope="session")
+def check_oracle(spark, sf_dir, oracle):
+    """Run registry key ``key`` and hold it to its ``oracle_sql()``
+    twin with the driver-gate comparator."""
+    queries, sqls = entry.queries(), entry.oracle_sql()
 
+    def check(key: str) -> None:
+        got = queries[key](spark, sf_dir).toPandas()
+        ok, why = compare(got, oracle.sql(sqls[key]).df())
+        assert ok, f"{key}: {why}"
 
-def assert_matches_oracle(spark_df, oracle_con, sql: str, float_exact: bool = True):
-    got = normalize(spark_df.toPandas())
-    want = normalize(oracle_con.sql(sql).df())
-    assert list(got.columns) == list(want.columns), (
-        f"column mismatch: {list(got.columns)} vs {list(want.columns)}"
-    )
-    assert len(got) == len(want), f"row count {len(got)} vs {len(want)}"
-    for c in got.columns:
-        g, w = got[c], want[c]
-        if np.issubdtype(g.dtype, np.floating) or np.issubdtype(w.dtype, np.floating):
-            g = g.astype(float).to_numpy()
-            w = w.astype(float).to_numpy()
-            both_nan = np.isnan(g) & np.isnan(w)
-            if float_exact:
-                ok = (g == w) | both_nan
-            else:
-                ok = np.isclose(g, w, rtol=1e-9, atol=1e-12) | both_nan
-            assert ok.all(), f"float col {c}: max diff {np.nanmax(np.abs(g - w))}"
-        else:
-            pd.testing.assert_series_equal(
-                g.reset_index(drop=True), w.reset_index(drop=True),
-                check_dtype=False, check_names=False, obj=f"col {c}",
-            )
+    return check

@@ -1,7 +1,9 @@
 """SURVEY §2 A11/A12 + H: Datacube facade, cube builder, sources."""
 
+import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from icecube_spark import catalog
@@ -188,19 +190,44 @@ def test_orc_scan_prunes_and_pushes(spark, sf_dir, tmp_path):
     assert "PushedFilters: [" in plan and "user_id" in plan
 
 
-REF_LABELS = "/root/reference/tests/resources/labels/dummy_vector_labels.json"
+@pytest.fixture
+def labels_json(tmp_path):
+    """A vector-labels document in the reference schema
+    (create_json_labels.py): one pretty-printed array of products,
+    each with its list of classed bounding boxes."""
+    doc = [
+        {
+            "product_file": f"ICEYE_GRD_{i}.tif",
+            "labels": {
+                "objects": [
+                    {
+                        "class": f"rand-{(i + j) % 3}",
+                        "bbox": {
+                            "xmin": 4 * j,
+                            "ymin": 3 * j + i,
+                            "xmax": 4 * j + 5,
+                            "ymax": 3 * j + i + 7,
+                        },
+                    }
+                    for j in range(n)
+                ]
+            },
+        }
+        for i, n in enumerate([3, 1, 4])
+    ]
+    path = tmp_path / "vector_labels.json"
+    path.write_text(json.dumps(doc, indent=4))
+    return str(path)
 
 
-def test_labels_json_reads_reference_fixture(spark):
-    """A18: the labels source parses the reference's own vector-labels
-    fixture (create_json_labels.py schema) — object counts per product
+def test_labels_json_reads_reference_fixture(spark, labels_json):
+    """A18: the labels source parses a reference-schema vector-labels
+    document (create_json_labels.py) — object counts per product
     match the raw document."""
-    import json
-
     from icecube_spark.sources import labels as L
 
-    flat = L.read_labels_json(spark, REF_LABELS).toPandas()
-    raw = json.load(open(REF_LABELS))
+    flat = L.read_labels_json(spark, labels_json).toPandas()
+    raw = json.load(open(labels_json))
     want = {r["product_file"]: len(r["labels"]["objects"]) for r in raw}
     got = flat.groupby("product_file").size().to_dict()
     assert got == want
@@ -208,11 +235,11 @@ def test_labels_json_reads_reference_fixture(spark):
     assert flat["obj_class"].str.startswith("rand-").all()
 
 
-def test_labels_json_round_trip(spark, tmp_path):
+def test_labels_json_round_trip(spark, tmp_path, labels_json):
     """A18: flat -> nested JSON -> flat is lossless."""
     from icecube_spark.sources import labels as L
 
-    flat = L.read_labels_json(spark, REF_LABELS)
+    flat = L.read_labels_json(spark, labels_json)
     out = str(tmp_path / "labels_out")
     L.write_labels_json(flat, out)
     back = L.read_labels_json(spark, out)
@@ -221,16 +248,14 @@ def test_labels_json_round_trip(spark, tmp_path):
     assert a.equals(b)
 
 
-def test_prune_metadata_rows_for_labels(spark):
+def test_prune_metadata_rows_for_labels(spark, labels_json):
     """A18: prune_metadata_rows_for_labels mirrors the reference
     (labels_datacube.py:160) — null-path gap rows stay, labeled rows
     stay (matched on basename vs product_file), everything else is
     dropped; and the labeled branch is a broadcast semi join."""
-    import json
-
     from icecube_spark.sources import labels as L
 
-    raw = json.load(open(REF_LABELS))
+    raw = json.load(open(labels_json))
     labeled_files = [r["product_file"] for r in raw]
     assert len(labeled_files) >= 2
     meta = spark.createDataFrame(
@@ -243,7 +268,7 @@ def test_prune_metadata_rows_for_labels(spark):
         ],
         "product_fpath string, tag string",
     )
-    flat = L.read_labels_json(spark, REF_LABELS)
+    flat = L.read_labels_json(spark, labels_json)
     out = L.prune_metadata_rows_for_labels(meta, flat)
     got = sorted(r.tag for r in out.collect())
     assert got == ["a", "b", "gap1", "gap2"]
@@ -375,3 +400,45 @@ def test_corrupt_json_records_are_quarantined(spark, tmp_path):
     assert bad.count() == 2
     assert {r.id for r in good.collect()} == {1, 2}
     df.unpersist()
+
+
+def test_slc_cube_keeps_latest_per_date_on_grid(spark, tmp_path):
+    """SLC stacks share the GRD cube assembly: with temporal_overlap
+    false only the later of two same-date products survives, and
+    temporal_resolution lays the layers on a daily slot grid whose
+    empty slots are gap rows (reference SLCDatacube.create)."""
+    import numpy as np
+
+    from icecube_spark.cube import create_cube_from_slc
+    from icecube_spark.sources.hdf5_write import write_h5
+
+    rng = np.random.default_rng(5)
+    for name, end_utc in [
+        ("a.h5", "2021-03-01T10:00:00.000000"),
+        ("b.h5", "2021-03-03T09:00:00.000000"),
+        ("c.h5", "2021-03-03T21:00:00.000000"),
+    ]:
+        (tmp_path / name).write_bytes(write_h5({
+            "s_i": rng.normal(size=(4, 4)),
+            "s_q": rng.normal(size=(4, 4)),
+            "product_file": name,
+            "acquisition_end_utc": end_utc,
+            "incidence_center": "30.0",
+            "orbit_direction": "ASCENDING",
+            "number_of_azimuth_samples": "4",
+            "number_of_range_samples": "4",
+        }))
+    cfg = CubeConfig.from_dict({
+        "start_date": 20210301,
+        "end_date": 20210305,
+        "temporal_overlap": False,
+        "temporal_resolution": 1,
+    })
+    dc = create_cube_from_slc(spark, str(tmp_path), cfg)
+    rows = dc.df.orderBy(dc.ts_col).collect()
+    assert [str(getattr(r, dc.ts_col)) for r in rows] == [
+        f"2021-03-0{d}" for d in range(1, 6)
+    ]
+    assert [r.product_file for r in rows] == ["a.h5", None, "c.h5", None, None]
+    assert [r.Real is None for r in rows] == [False, True, False, True, True]
+    assert dc.band_cols == ["Real", "Complex"]

@@ -2,6 +2,8 @@
 consistent (every oracle key registered, no stray oracles, callables
 importable) — catches wiring mistakes before the driver does."""
 
+import pytest
+
 import __spark_entry__ as entry
 
 
@@ -26,9 +28,12 @@ def test_rows_only_keys_are_the_documented_set():
         "multimodal_features",
         "embed_pca_top",
     }, f"unexpected rows-only keys: {sorted(rows_only)}"
-    # every rows-only key must sit in the _NO_ORACLE tier so the
-    # driver's head sample never burns a hard-evidence slot on one
-    assert rows_only == set(entry._NO_ORACLE)
+
+
+def test_oracle_key_defined_twice_fails():
+    """Two family dicts defining one key must not merge silently."""
+    with pytest.raises(ValueError, match="defined twice: \\['k'\\]"):
+        entry._merge_oracles({"k": "SELECT 1"}, {"j": "SELECT 2", "k": "SELECT 3"})
 
 
 def test_all_query_callables_are_callable():
@@ -75,7 +80,7 @@ def test_survey_status_counts_match_registry():
         r"and (\d+)\s*rows-only by nature", text
     )
     assert m2, "SURVEY.md STATUS lost its rows-only count"
-    assert int(m2.group(1)) == len(entry._NO_ORACLE)
+    assert int(m2.group(1)) == len(set(entry.queries()) - set(entry.oracle_sql()))
 
 
 def test_fast_funnel_sweep_over_pinned_plans_is_clean():

@@ -1,46 +1,8 @@
-"""Skew utilities, SQL interface, partition pruning."""
+"""SQL interface, partition pruning."""
 
 from pyspark.sql import functions as F
 
 from icecube_spark import catalog
-from icecube_spark.functions.parity import dsum
-from icecube_spark.operators.skew import replicated_salted_join, salted_agg
-
-
-def test_salted_agg_matches_plain(spark, sf_dir):
-    li = catalog.load(spark, sf_dir, "lineitem")
-    plain = (
-        li.groupBy("l_returnflag")
-        .agg(F.count(F.lit(1)).alias("n"), dsum("l_quantity").alias("total"))
-        .toPandas()
-        .set_index("l_returnflag")
-        .sort_index()
-    )
-    salted = (
-        salted_agg(
-            li,
-            ["l_returnflag"],
-            {
-                "n": (F.count(F.lit(1)), F.sum("n")),
-                "total": (dsum("l_quantity"), F.sum(F.col("total").cast("decimal(18,8)")).cast("double")),
-            },
-        )
-        .toPandas()
-        .set_index("l_returnflag")
-        .sort_index()
-    )
-    assert (plain["n"] == salted["n"]).all()
-    assert (plain["total"] == salted["total"]).all()
-
-
-def test_replicated_salted_join_matches_plain(spark, sf_dir):
-    li = catalog.load(spark, sf_dir, "lineitem").withColumnRenamed(
-        "l_partkey", "p_partkey"
-    )
-    part = catalog.load(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    plain = li.join(part, "p_partkey").count()
-    salted = replicated_salted_join(li, part, "p_partkey").count()
-    assert plain == salted
 
 
 def test_sql_interface(spark, sf_dir, oracle):
